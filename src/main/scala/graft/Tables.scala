@@ -28,19 +28,22 @@ object Tables {
   // itself; a production table with splittable files/row groups scans
   // wide naturally, the condition is false, and no repartition (no
   // payload movement, the q206 concern) is ever inserted. Decisions
-  // (and the footer-read of the schema) are memoized per (session,
-  // dir, table) — plans are immutable, so handing back the same
-  // DataFrame is safe and saves a footer read per call.
+  // (and the footer-read of the schema) are memoized per (Spark
+  // application, dir, table) — the key `Shared.memoized` uses; plans
+  // are immutable, so handing back the same DataFrame is safe and
+  // saves a footer read per call.
   private val MinParallelizeBytes = 256L << 10
   private val scans = scala.collection.concurrent.TrieMap
-    .empty[(Int, String, String), DataFrame]
+    .empty[(String, String, String), DataFrame]
 
-  private def diskBytes(f: java.io.File): Long =
-    if (f.isDirectory) f.listFiles.map(diskBytes).sum else f.length
+  private[graft] def diskBytes(f: java.io.File): Long =
+    if (!f.isDirectory) f.length
+    else Option(f.listFiles).getOrElse(throw new java.io.IOException(
+      s"cannot list table directory ${f.getPath}")).map(diskBytes).sum
 
   def apply(spark: SparkSession, dir: String, name: String): DataFrame =
     scans.getOrElseUpdate(
-      (System.identityHashCode(spark), dir, name), {
+      (spark.sparkContext.applicationId, dir, name), {
         val df = spark.read.parquet(s"$dir/$name.parquet")
         val target = spark.sparkContext.defaultParallelism
         val parts = df.rdd.getNumPartitions

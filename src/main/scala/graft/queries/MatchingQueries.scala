@@ -41,11 +41,9 @@ object MatchingQueries {
   // Partitioned by doc1 ALONE (round 17, guide §2.4): HashPartitioning
   // on a subset of downstream keys satisfies every ClusteredDistribution
   // that includes doc1 — so scorePairs' groupBy(doc1, doc2), the pivot
-  // full-outer join on (doc1, doc2), AND the weight-family rank windows
-  // over (grid point, doc1) all plan with ZERO exchanges off this
-  // layout. The previous (doc1, doc2) layout satisfied the first two
-  // but NOT the windows, which re-shuffled |pairs|×|grid points| rows
-  // on every training evaluation pass.
+  // full-outer join on (doc1, doc2), AND the weight-family group-local
+  // ranking per doc1 (WeightTraining.scorePoints) all plan with ZERO
+  // exchanges off this layout.
   private def partCands(s: SparkSession, dir: String): DataFrame =
     memoized(s, dir, "partCands", Seq("doc1"))(
       EntityMatching.candidatePairs(partEntities(s, dir)))
@@ -113,9 +111,9 @@ object MatchingQueries {
     // parts = doc1 (round 17): the pivot's full-outer join reports
     // UnknownPartitioning (outer nulls), so the intersection re-pins
     // the doc1 hash layout here — a sub-GiB repartition at build that
-    // makes every training evaluation's rank window over (grid point,
-    // doc1) exchange-free (subset clustering), for q20/q72 and the
-    // k=3/k=6 tables derived from this frame.
+    // lets every training evaluation rank each doc1 group in place,
+    // exchange-free, for q20/q72 and the k=3/k=6 tables derived from
+    // this frame.
     memoized(s, dir, "pairScores2", Seq("doc1"))(
       pivotedScores(s, dir)
         .filter(col("part_overlap") > 0.0 && col("partsupp_overlap") > 0.0)
@@ -463,7 +461,7 @@ object MatchingQueries {
     // (one per lattice/probe evaluation round) — a user tuning weights
     // persists the score table once, so the sweep should too
     // parts = doc1: the year-dim joins broadcast one side or the
-    // other, so the layout is re-pinned for the rank windows (same
+    // other, so the layout is re-pinned for the doc1 ranking (same
     // rationale as pairScores2; the frame is intersection-sized)
     memoized(s, dir, "pairScores3", Seq("doc1")) {
       val yrs = Tables.orders(s, dir)
@@ -478,9 +476,8 @@ object MatchingQueries {
   /** q159: k-type weight-grid evaluation (J7/A9 at the reference's
     * real arity — `WeightTrainerStage.scala:321-456` walks ~9 types;
     * q20 is the 2-type base case): the constrained 3-type simplex
-    * lattice (Σnᵢ = 5, 21 points) generated by iterated constrained
-    * cross joins, every point evaluated in ONE distributed pass over
-    * the 3-score match table. */
+    * lattice (Σnᵢ = 5, 21 points) enumerated driver-side, every point
+    * scored in ONE group-local pass over the 3-score match table. */
   def q159WeightGridK3(s: SparkSession, dir: String): DataFrame =
     WeightTraining.evaluateSimplexLabeled(
         withLabels(weightPairScores3(s, dir)),
@@ -550,7 +547,7 @@ object MatchingQueries {
     // memoized: the k=6 family (q199 grid, q200 Walker) drives many
     // distributed passes over this frame (126-point coarse lattice +
     // up to 31 probes per round)
-    // parts = doc1 — same rank-window rationale as pairScores2/3
+    // parts = doc1 — same in-place ranking rationale as pairScores2/3
     memoized(s, dir, "pairScores6", Seq("doc1")) {
       val dim = Tables.orders(s, dir).select(
         col("o_orderkey").as("doc_id"),
@@ -575,11 +572,11 @@ object MatchingQueries {
 
   /** q199: weight-grid evaluation at the reference's real arity (k=6;
     * J7/A9): the constrained 6-type simplex lattice (Σnᵢ = 4,
-    * C(9,5) = 126 points) generated by iterated constrained cross
-    * joins, every point evaluated in ONE distributed pass over the
-    * 6-score match table — the |pairs|×|grid| shuffle the verdict
-    * flagged as the cost that grows with k, measured here as its own
-    * BASELINE row. */
+    * C(9,5) = 126 points) enumerated driver-side, every point scored
+    * in ONE group-local pass over the 6-score match table: each doc1
+    * group is ranked under all 126 points in place, so the cost grows
+    * with |pairs|·|points| arithmetic, never a |pairs|×|points| frame
+    * or shuffle. */
   def q199WeightGridK6(s: SparkSession, dir: String): DataFrame =
     WeightTraining.evaluateSimplexLabeled(
         withLabels(weightPairScores6(s, dir)),
@@ -1524,7 +1521,7 @@ object MatchingQueries {
            CAST(sum(item_count) AS BIGINT) AS total_items,
            max(score) AS score
          FROM dups GROUP BY 1, 2, 3 ORDER BY pair_lo, pair_hi""",
-    // refineWeights walks the num/80 lattice (WeightTraining scaladoc):
+    // refineWeightsLabeled walks the num/80 lattice (WeightTraining scaladoc):
     // evaluate every lattice point once, then unroll the coarse pick
     // and the four halving rounds as argmin CTEs — composed from the
     // q72PairscSql/q72ErrsSql/q72WalkSql fragments the sharded sf1

@@ -553,33 +553,69 @@ class NewQueryPlanSpec extends AnyFunSuite {
       s"post-checkpoint plan must hold <= cadence iteration towers, found $towers:\n$plan")
   }
 
-  test("q159: simplex grid broadcasts; one distributed pass (window + combinable agg)") {
-    val plan = executed(queries.MatchingQueries.q159WeightGridK3(spark, sf))
-    assert(!plan.contains("CartesianProduct"),
-      s"q159's grid cross must broadcast, never cartesian:\n$plan")
-    assert(plan.contains("BroadcastNestedLoopJoin") ||
-      plan.contains("BroadcastHashJoin"),
-      s"q159's 21-point grid must broadcast against the match table:\n$plan")
-    assert(plan.contains("partial_sum"),
-      s"q159's error roll-up must combine map-side:\n$plan")
+  /** The shape of one weight-lattice evaluation: the pair memo is
+    * scanned once and ranked group-locally per doc1 in its own doc1
+    * layout (no exchange on doc1) — no rank window,
+    * no |pairs|×|points| cross product — and the per-point counters
+    * roll up through a partial (map-side) aggregate. Walks the physical
+    * tree through AQE stages but not into the memo's own cached plan. */
+  private def assertGroupLocalScoring(what: String,
+      plan: org.apache.spark.sql.execution.SparkPlan): Unit = {
+    import org.apache.spark.sql.execution._
+    import org.apache.spark.sql.execution.aggregate.HashAggregateExec
+    import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+    import org.apache.spark.sql.execution.joins.{BroadcastNestedLoopJoinExec, CartesianProductExec}
+    import org.apache.spark.sql.execution.window.WindowExec
+    import org.apache.spark.sql.catalyst.expressions.aggregate.Partial
+    val nodes = new adaptive.AdaptiveSparkPlanHelper {}.collect(plan) { case p => p }
+    assert(!nodes.exists(_.isInstanceOf[WindowExec]),
+      s"$what must rank group-locally, not in a window:\n$plan")
+    assert(!nodes.exists(n => n.isInstanceOf[BroadcastNestedLoopJoinExec] ||
+        n.isInstanceOf[CartesianProductExec]),
+      s"$what must not cross the pair table with the grid:\n$plan")
+    assert(nodes.count(_.isInstanceOf[InMemoryTableScanExec]) == 1,
+      s"$what must scan the pair memo exactly once:\n$plan")
+    assert(nodes.collect { case e: exchange.ShuffleExchangeExec => e.outputPartitioning }
+        .forall(!_.toString.contains("doc1")),
+      s"$what must rank in place on the memo's doc1 layout, not re-shuffle it:\n$plan")
+    assert(nodes.exists {
+        case a: HashAggregateExec => a.aggregateExpressions.exists(_.mode == Partial)
+        case _ => false
+      }, s"$what's per-point roll-up must combine map-side:\n$plan")
   }
 
-  test("q160: every walker evaluation broadcasts its probe grid") {
-    import org.apache.spark.sql.functions._
-    val ps = queries.MatchingQueries.weightPairScores(spark, sf)
-      .withColumn("s3", lit(50.0))
-    val labels = ps.select(col("doc1"), col("doc2"),
-      ((col("doc1") + col("doc2")) % 5 === 0).as("accepted"))
-    val grid = graft.operators.WeightTraining.simplexGrid(spark, 3, 4)
-    val df = graft.operators.WeightTraining
-      .evaluateSimplex(ps, labels, grid, 3)
+  test("q159: all simplex points scored in one pair-memo pass") {
+    val df = queries.MatchingQueries.q159WeightGridK3(spark, sf)
     df.collect()
-    val plan = df.queryExecution.executedPlan.toString
-    assert(!plan.contains("CartesianProduct"),
-      s"q160's per-round evaluation must broadcast the probe grid:\n$plan")
-    assert(plan.contains("BroadcastNestedLoopJoin") ||
-      plan.contains("BroadcastHashJoin"),
-      s"q160's probe grid must broadcast:\n$plan")
+    assertGroupLocalScoring("q159", df.queryExecution.executedPlan)
+  }
+
+  test("q160: each walker evaluation is one pair-memo pass") {
+    import org.apache.spark.sql.execution.{LocalTableScanExec, QueryExecution}
+    import org.apache.spark.sql.functions._
+    import org.apache.spark.sql.util.QueryExecutionListener
+    val labeled = queries.MatchingQueries.weightPairScores3(spark, sf)
+      .withColumn("accepted", (col("doc1") + col("doc2")) % 5 === 0)
+    labeled.count() // build the memo before listening
+    val plans = new java.util.concurrent.ConcurrentLinkedQueue[
+      org.apache.spark.sql.execution.SparkPlan]()
+    val listener = new QueryExecutionListener {
+      // each probe grid's own driver-side collect is a bare local scan
+      def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit =
+        if (!qe.executedPlan.isInstanceOf[LocalTableScanExec])
+          plans.add(qe.executedPlan)
+      def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    try {
+      graft.operators.WeightTraining
+        .refineWeightsSimplexLabeled(spark, labeled, k = 3)
+      // listener events arrive asynchronously: coarse pass + 3 rounds
+      val deadline = System.nanoTime() + 30000000000L
+      while (plans.size < 4 && System.nanoTime() < deadline) Thread.sleep(50)
+    } finally spark.listenerManager.unregister(listener)
+    assert(plans.size == 4, s"expected 4 walker evaluations, saw ${plans.size}")
+    plans.forEach(p => assertGroupLocalScoring("q160's walker evaluation", p))
   }
 
   test("q156: exactly one join, and it is the keyed full outer") {

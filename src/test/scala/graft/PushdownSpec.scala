@@ -52,4 +52,20 @@ class PushdownSpec extends AnyFunSuite {
     assert(!plan.contains("ExistingRDD") && !plan.contains("DeserializeToObject"),
       s"opaque RDD boundary in a relational query:\n$plan")
   }
+
+  test("an unlistable table directory fails naming the path, not with an NPE") {
+    // File.listFiles returns null when a directory cannot be read
+    val dir = new java.io.File(s"$sf/unreadable.parquet") {
+      override def isDirectory: Boolean = true
+      override def listFiles(): Array[java.io.File] = null
+    }
+    val e = intercept[java.io.IOException](Tables.diskBytes(dir))
+    assert(e.getMessage.contains(dir.getPath), e.getMessage)
+  }
+
+  test("scans are cached per Spark application, not per session object") {
+    assert(Tables.orders(spark, sf) eq Tables.orders(spark, sf))
+    // a sibling session shares the application (and its SparkContext)
+    assert(Tables.orders(spark.newSession(), sf) eq Tables.orders(spark, sf))
+  }
 }

@@ -1,6 +1,10 @@
 package graft
 
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
+import graft.operators.WeightTraining
 import graft.queries.MatchingQueries
 
 /** Semantic assertions for the Walker-style weight refinement (q72 is
@@ -79,7 +83,6 @@ class WeightSpec extends AnyFunSuite {
   }
 
   test("refineWeightsSimplex at k=4: trajectory laws hold on a synthetic 4-score table") {
-    import org.apache.spark.sql.functions._
     import spark.implicits._
     // deterministic synthetic pairs: 40 doc1 groups x 5 candidates,
     // score s_i favors different candidates per type so the walk has
@@ -110,7 +113,6 @@ class WeightSpec extends AnyFunSuite {
   }
 
   test("evaluateSimplex k=2 agrees with evaluateGrid on the same weight points") {
-    import org.apache.spark.sql.functions._
     val ps = MatchingQueries.weightPairScores(spark, sf)
     val labels = ps.select(col("doc1"), col("doc2"),
       ((col("doc1") + col("doc2")) % 5 === 0).as("accepted"))
@@ -134,6 +136,65 @@ class WeightSpec extends AnyFunSuite {
     assert(viaSimplex.nonEmpty)
     viaGrid.foreach { case (i, v) =>
       assert(viaSimplex(i) == v, s"point $i: simplex ${viaSimplex(i)} vs grid $v")
+    }
+  }
+
+  /** The broadcast-cross + rank-window evaluation the group-local
+    * kernel replaced: |pairs|×|points| rows, one row_number window per
+    * (point, doc1). Kept here as the reference the kernel must match. */
+  private def windowReference(labeled: DataFrame, grid: DataFrame,
+                              k: Int): DataFrame = {
+    val nCols = (1 to k).map(i => col(s"n$i"))
+    val total = (1 to k).map(i => col(s"w$i") * col(s"s$i")).reduce(_ + _)
+    val w = Window.partitionBy(nCols :+ col("doc1"): _*)
+      .orderBy(col("total_micro").desc, col("doc2"))
+    labeled.crossJoin(broadcast(grid))
+      .withColumn("total_micro", round(total * 1e6).cast("long"))
+      .withColumn("rnk", row_number().over(w))
+      .groupBy(nCols: _*)
+      .agg(
+        sum(when(col("accepted"), col("rnk") - 1L).otherwise(0L)).as("error"),
+        sum(when(col("accepted") && col("rnk") === 1, 1L).otherwise(0L)).as("n_top1"),
+        sum(when(col("accepted") && col("rnk") <= 3, 1L).otherwise(0L)).as("n_top3"),
+        sum(when(col("accepted"), 1L).otherwise(0L)).as("n_accepted"))
+  }
+
+  private def countersByPoint(df: DataFrame, k: Int) =
+    df.select((1 to k).map(i => col(s"n$i")) ++
+        Seq("error", "n_top1", "n_top3", "n_accepted").map(col): _*)
+      .collect().map(r => ((0 until k).map(r.getLong),
+        (k until k + 4).map(r.getLong))).toMap
+
+  test("group-local kernel matches the window reference at every point (k = 2, 3, 6)") {
+    // scores are multiples of 1/128 (1/128·1e6 = 7812.5 exactly), some
+    // nudged by ±5e-7: with weights in quarters, totals·1e6 tie often
+    // (doc2 decides), many sit exactly on .5, and others sit next to a
+    // .5 — so the rounding of half-way totals decides ranks
+    def fixture(base: DataFrame, k: Int): DataFrame =
+      base.select(Seq(col("doc1"), col("doc2")) ++
+          (1 to k).map(i => ((col("id") * (2 * i + 1) + i) % 5 / 128.0 +
+            ((col("id") + i) % 3 - 1) * 5e-7).as(s"s$i")) :+
+          // doc1 = 0 is a group where every pair is accepted
+          (col("doc1") === 0 || (col("doc1") + col("doc2")) % 3 === 0).as("accepted"): _*)
+    // clustered: 7-row groups plus single-row groups (id >= 140),
+    // hash-partitioned on doc1 like the pair memos
+    val clustered = spark.range(0, 160).select(col("id"),
+        when(col("id") < 140, col("id") / 7).otherwise(col("id")).cast("long").as("doc1"),
+        ((col("id") * 37) % 101 + 1000).as("doc2"))
+      .repartition(4, col("doc1"))
+    // unclustered: every doc1 group spread over all range partitions
+    val spread = spark.range(0, 150, 1, 3).select(col("id"),
+      (col("id") % 23).as("doc1"), ((col("id") * 37) % 151 + 1000).as("doc2"))
+    for (k <- Seq(2, 3, 6); (name, base) <- Seq("clustered" -> clustered, "spread" -> spread)) {
+      val labeled = fixture(base, k)
+      val grid = WeightTraining.simplexGrid(spark, k, 4)
+      val got = countersByPoint(WeightTraining.evaluateSimplexLabeled(labeled, grid, k), k)
+      val want = countersByPoint(windowReference(labeled, grid, k), k)
+      assert(got.size == grid.count() && got.keySet == want.keySet, s"k=$k $name: points")
+      want.foreach { case (ns, v) =>
+        assert(got(ns) == v, s"k=$k $name point $ns: kernel ${got(ns)} vs window $v")
+      }
+      assert(want.values.exists(_.head > 0), s"k=$k $name: fixture must rank something")
     }
   }
 }
