@@ -44,7 +44,7 @@ object MatchingQueries {
   // full-outer join on (doc1, doc2), AND the weight-family group-local
   // ranking per doc1 (WeightTraining.scorePoints) all plan with ZERO
   // exchanges off this layout.
-  private def partCands(s: SparkSession, dir: String): DataFrame =
+  private[graft] def partCands(s: SparkSession, dir: String): DataFrame =
     memoized(s, dir, "partCands", Seq("doc1"))(
       EntityMatching.candidatePairs(partEntities(s, dir)))
 
@@ -52,7 +52,7 @@ object MatchingQueries {
   // over the doc1-partitioned candidate cache, so the aggregation is
   // exchange-free and its output KEEPS the doc1 hash layout — an extra
   // repartition would re-shuffle 9M rows into the layout they are in.
-  private def partScores(s: SparkSession, dir: String): DataFrame =
+  private[graft] def partScores(s: SparkSession, dir: String): DataFrame =
     memoized(s, dir, "partScores")(
       EntityMatching.scorePairs(partCands(s, dir), "part_overlap"))
 
@@ -62,7 +62,7 @@ object MatchingQueries {
   // (same one-exchange build cost as before, but the cached output is
   // doc1-partitioned like partScores, which the pivot join and the
   // weight windows require to stay exchange-free).
-  private def partSuppScores(s: SparkSession, dir: String): DataFrame =
+  private[graft] def partSuppScores(s: SparkSession, dir: String): DataFrame =
     memoized(s, dir, "partSuppScores") {
       val n = s.conf.get("spark.sql.shuffle.partitions", "32").toInt
       EntityMatching.scorePairs(
@@ -76,7 +76,7 @@ object MatchingQueries {
     * Unmemoized, q20 recomputed the pivot twice (scores + labels) and
     * shuffled the two copies into a 9M×9M join — measured 227 s vs
     * ~2 s for the whole of q72's eleven cached evaluations at sf0.1. */
-  private def pivotedScores(s: SparkSession, dir: String): DataFrame =
+  private[graft] def pivotedScores(s: SparkSession, dir: String): DataFrame =
     memoized(s, dir, "pivotedScores")(
       // Full-outer join instead of union + groupBy(max(when)) (round
       // 17, guide §2.4): each score frame holds at most one row per
@@ -119,31 +119,6 @@ object MatchingQueries {
         .filter(col("part_overlap") > 0.0 && col("partsupp_overlap") > 0.0)
         .select(col("doc1"), col("doc2"),
           col("part_overlap").as("s1"), col("partsupp_overlap").as("s2")))
-
-  /** Materialize the shared match-pipeline caches layer by layer, so a
-    * bench sweep can pay the build cost in a dedicated `cache_build`
-    * step instead of silently loading it onto whichever of q13/q17/q19
-    * happens to run first (the "absorber" swing BASELINE.md documents).
-    * Each count() reuses the layer below, so the attribution is the
-    * incremental build cost of that layer. */
-  private[queries] def warmShared(s: SparkSession, dir: String): Unit = {
-    import scala.concurrent.{Await, Future}
-    import scala.concurrent.ExecutionContext.Implicits.global
-    import scala.concurrent.duration.Duration
-    // the part chain (cands → scores) and the partsupp chain are
-    // independent; the pivot needs both
-    val part = Future { partCands(s, dir).count(); partScores(s, dir).count() }
-    val supp = Future { partSuppScores(s, dir).count(); () }
-    Seq(part, supp).foreach(Await.result(_, Duration.Inf))
-    pivotedScores(s, dir).count()
-    weightPairScores(s, dir).count()
-    // the k=3 and k=6 chains both hang off pairScores2 and are
-    // independent of each other — build them as concurrent Spark jobs
-    // (round 17; the same rationale as the part/supp fork above)
-    val k3 = Future { weightPairScores3(s, dir).count(); k3Walk(s, dir).count() }
-    val k6 = Future { weightPairScores6(s, dir).count(); k6Walk(s, dir).count() }
-    Seq(k3, k6).foreach(Await.result(_, Duration.Inf))
-  }
 
   /** Document-type dim: open orders play the PROPOSAL role. */
   private def docTypes(s: SparkSession, dir: String): DataFrame =
@@ -496,7 +471,7 @@ object MatchingQueries {
     * artifact; q160 reports it and q161 applies it, so the
     * 4-evaluation-pass walk runs once per (session, dir) instead of
     * once per consumer. */
-  private def k3Walk(s: SparkSession, dir: String): DataFrame =
+  private[graft] def k3Walk(s: SparkSession, dir: String): DataFrame =
     memoized(s, dir, "k3walk") {
       WeightTraining.refineWeightsSimplexLabeled(s,
         withLabels(weightPairScores3(s, dir)), k = 3)
@@ -588,7 +563,7 @@ object MatchingQueries {
     * reports it and q203 applies it, so the 4-evaluation-pass walk
     * runs once per (session, dir). The frame is 4 rows; the cost is
     * the eager driver loop at build. */
-  private def k6Walk(s: SparkSession, dir: String): DataFrame =
+  private[graft] def k6Walk(s: SparkSession, dir: String): DataFrame =
     memoized(s, dir, "k6walk") {
       WeightTraining.refineWeightsSimplexLabeled(s,
         withLabels(weightPairScores6(s, dir)), k = 6)

@@ -250,9 +250,14 @@ object MiscQueries {
   /** Exposed for the NewQueryPlanSpec lineage assertion. */
   private[graft] def prCheckpointCadence: Int = PrCheckpointEvery
 
-  private[graft] def pageRank(s: SparkSession, dir: String,
-                              iterations: Int): DataFrame = {
-    val S = 100000000L // supplier-node offset (disjoint from custkeys)
+  /** Supplier-node offset of the trade graph (disjoint from custkeys). */
+  private val S = 100000000L
+
+  /** Undirected customer–supplier trade edges shared by q121 and q182.
+    * Hash-partitioned by src before caching: every iteration joins on
+    * src, so the cached layout satisfies the join's distribution and
+    * only the tiny rank frame shuffles per iteration. */
+  private[graft] def prEdges(s: SparkSession, dir: String): DataFrame = {
     val trades = Tables.orders(s, dir)
       .select(col("o_orderkey"), col("o_custkey"))
       .join(Tables.lineitem(s, dir)
@@ -260,12 +265,14 @@ object MiscQueries {
         Seq("o_orderkey"))
       .select(col("o_custkey").as("c"), (col("l_suppkey") + S).as("p"))
       .distinct()
-    // hash-partitioned by src before caching: every iteration joins on
-    // src, so the cached layout satisfies the join's distribution and
-    // only the tiny rank frame shuffles per iteration
-    val edges = Shared.memoized(s, dir, "prEdges", Seq("src"))(
+    Shared.memoized(s, dir, "prEdges", Seq("src"))(
       trades.select(col("c").as("src"), col("p").as("dst"))
         .unionByName(trades.select(col("p").as("src"), col("c").as("dst"))))
+  }
+
+  private[graft] def pageRank(s: SparkSession, dir: String,
+                              iterations: Int): DataFrame = {
+    val edges = prEdges(s, dir)
     // outdeg is node-count-sized and read by EVERY iteration (plus the
     // init and final projections) — persist it once instead of
     // re-aggregating the edge cache per iteration (round 17, guide
@@ -386,17 +393,7 @@ object MiscQueries {
     * combinable sum by dst per iteration over the cached edges; the
     * seed flag rides in a broadcast. */
   def q182TrustRank(s: SparkSession, dir: String): DataFrame = {
-    val S = 100000000L
-    val trades = Tables.orders(s, dir)
-      .select(col("o_orderkey"), col("o_custkey"))
-      .join(Tables.lineitem(s, dir)
-        .select(col("l_orderkey").as("o_orderkey"), col("l_suppkey")),
-        Seq("o_orderkey"))
-      .select(col("o_custkey").as("c"), (col("l_suppkey") + S).as("p"))
-      .distinct()
-    val edges = Shared.memoized(s, dir, "prEdges", Seq("src"))(
-      trades.select(col("c").as("src"), col("p").as("dst"))
-        .unionByName(trades.select(col("p").as("src"), col("c").as("dst"))))
+    val edges = prEdges(s, dir)
     // persisted node-sized outdeg + single edge join per iteration —
     // same round-17 restructure as q121 (see pageRank)
     val outdeg = Shared.track(edges.groupBy("src")

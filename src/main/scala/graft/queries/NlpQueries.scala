@@ -317,7 +317,7 @@ object NlpQueries {
     * shape) scan. The corpus itself is read once. */
   /** The marker-wrapped word-frequency segmentation table BPE learning
     * and encoding share (built once per session). */
-  private def bpeVocab(s: SparkSession, dir: String): DataFrame =
+  private[graft] def bpeVocab(s: SparkSession, dir: String): DataFrame =
     Shared.memoized(s, dir, "bpeVocab")(
       Tables.documents(s, dir)
         .select(explode(TextFns.tokens(col("text"))).as("word"))

@@ -91,9 +91,9 @@ object ParityQueries {
         explode(TextFns.shingles(TextFns.tokens(col("text")), 3)).as("w"))
       .groupBy("doc_id", "w").agg(count(lit(1)).as("tf"))
 
-  /** Force the shared 3-shingle tf cache (q49/q50/q53/q81 band). */
-  private[queries] def warmShared(s: SparkSession, dir: String): Unit =
-    Shared.memoized(s, dir, "shingleTf3")(shingleTf(s, dir)).count()
+  /** The shared 3-shingle tf cache (the q49/q50/q81 band). */
+  private[graft] def shingleTf3(s: SparkSession, dir: String): DataFrame =
+    Shared.memoized(s, dir, "shingleTf3")(shingleTf(s, dir))
 
   /** P8 + A4: rare-word matcher — keep terms passing the rare-word
     * predicate (document frequency in [2, 30], length in [5, 90],
@@ -104,7 +104,7 @@ object ParityQueries {
     // memoized: tf feeds the corpus count, the rare-term filter AND
     // both sides of the pair self-join — uncached, the tokenize →
     // explode → groupBy pipeline re-runs five times
-    val tf = Shared.memoized(s, dir, "shingleTf3")(shingleTf(s, dir))
+    val tf = shingleTf3(s, dir)
     val nDocs = tf.agg(countDistinct("doc_id").as("n_docs"))
     val rare = tf.groupBy("w").agg(count(lit(1)).as("df"))
       .filter(col("df").between(2, 30) &&
@@ -147,7 +147,7 @@ object ParityQueries {
     // postings collect then only ever sees ≤ df-cap docs per w, and
     // (doc1, pos1) determines w, so the expansion is already
     // (doc1, doc2, pos1)-distinct.
-    val keep = Shared.memoized(s, dir, "shingleTf3")(shingleTf(s, dir))
+    val keep = shingleTf3(s, dir)
       .groupBy("w").agg(count(lit(1)).as("df"))
       .filter(col("df").between(2, 20)).select("w")
     val postings = pos.join(keep, Seq("w"), "left_semi")
@@ -241,7 +241,7 @@ object ParityQueries {
     // same memoized frame as q49 (each tf row is a distinct (doc, w),
     // so per-w df = row count and per-doc positions = sum(tf)) — the
     // raw-occurrence shape re-ran the tokenize+explode four times
-    val tf = Shared.memoized(s, dir, "shingleTf3")(shingleTf(s, dir))
+    val tf = shingleTf3(s, dir)
     val nDocs = tf.agg(countDistinct("doc_id").as("n_docs"))
     val common = tf.groupBy("w").agg(count(lit(1)).as("df"))
       .crossJoin(broadcast(nDocs))

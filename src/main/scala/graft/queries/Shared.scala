@@ -53,10 +53,9 @@ object Shared {
     scala.collection.concurrent.TrieMap.empty[String, Long]
   @volatile private var epoch = 0L
 
-  // sweep-order instrumentation: (memo key, query name) pairs, so a
-  // discovery run can dump which queries consume which cache family
-  // (the family-clustered bench order is generated from this, not
-  // hand-guessed)
+  // sweep-order instrumentation: (memo key, query name) pairs — which
+  // queries read which cache family, checked against the declared
+  // consumers (graft.SweepOrder.families) by the query spec
   @volatile private var curQuery: String = ""
   private val touches =
     scala.collection.concurrent.TrieMap.empty[(String, String), Unit]
@@ -65,7 +64,7 @@ object Shared {
     * unset) — feeds the memo-touch report. */
   def beginQuery(name: String): Unit = curQuery = name
 
-  /** memo key → query names that touched it, for sweep-order design. */
+  /** memo key → query names that touched it (the observed consumers). */
   def touchReport: Seq[(String, Seq[String])] = touches.keys.toSeq
     .groupBy(_._1).view.mapValues(_.map(_._2).sorted).toSeq.sortBy(_._1)
 
@@ -76,41 +75,9 @@ object Shared {
                                          key: String, sec: Double): Unit =
     buildSec.put(s"${s.sparkContext.applicationId}|$dir|$key", sec)
 
-  /** Memo-family derivation edges: child key-name prefix → the parent
-    * family prefixes its build READS (prefixes, because parameterized
-    * keys carry scale-derived suffixes — "kmeans" covers "kmeans8").
-    * Declared here, next to the policy that needs it, and consumed two
-    * ways: [[effectiveCost]] prices a frame's rebuild at its own
-    * measured build PLUS every uncached ancestor's, and
-    * [[graft.SweepOrder]] derives the cluster-opener rank from the
-    * chain depth (deeper chain = costlier rebuild class). */
-  private[graft] val derivedFrom: Map[String, Seq[String]] = Map(
-    "partScores"    -> Seq("partCands"),
-    "pivotedScores" -> Seq("partScores", "partSuppScores"),
-    "pairScores2"   -> Seq("pivotedScores"),
-    "pairScores3"   -> Seq("pairScores2"),
-    "pairScores6"   -> Seq("pairScores2"),
-    "k3walk"        -> Seq("pairScores3"),
-    "k6walk"        -> Seq("pairScores6"),
-    "pqCodes"       -> Seq("pqCodebook"),
-    "ivfpqBook"     -> Seq("kmeans"),
-    "ivfpqCodes"    -> Seq("ivfpqBook", "kmeans"),
-    // round 18: the shared candidate-cosine frame and the memoized
-    // ANN search legs (rebuilding a leg re-reads its index family)
-    "candCosines"   -> Seq("lshBuckets"),
-    "annLsh"        -> Seq("lshBuckets"),
-    "annMlsh"       -> Seq("lshBuckets"),
-    "annIvfKmeans"  -> Seq("kmeans"),
-    "annIvfpq"      -> Seq("ivfpqCodes", "kmeans"),
-    "annPq"         -> Seq("pqCodes"),
-    "knnEdges"      -> Seq("candCosines"))
-
-  // longest declared prefix wins, so "pqCodes" can never accidentally
-  // resolve through a shorter sibling key
-  private def parentsOf(name: String): Seq[String] = {
-    val hits = derivedFrom.filter { case (p, _) => name.startsWith(p) }
-    if (hits.isEmpty) Nil else hits.maxBy(_._1.length)._2
-  }
+  // the declared parent families ([[graft.SweepOrder.families]])
+  private def parentsOf(name: String): Seq[String] =
+    graft.SweepOrder.familyOf(name).map(_.parents).getOrElse(Nil)
 
   /** TRUE rebuild price of memo key `mk`: its own measured build plus
     * the last measured build of every ancestor family that is no
@@ -142,6 +109,12 @@ object Shared {
   private[graft] def effectiveCostForTest(s: SparkSession, dir: String,
                                           key: String): Double =
     effectiveCost(s"${s.sparkContext.applicationId}|$dir|$key")
+
+  /** Test hook: the memo key names cached for (session, dir). */
+  private[graft] def cachedKeysForTest(s: SparkSession, dir: String): Set[String] = {
+    val scope = s"${s.sparkContext.applicationId}|$dir|"
+    memo.keySet.collect { case k if k.startsWith(scope) => k.drop(scope.length) }.toSet
+  }
 
   // every ANONYMOUS frame this module persisted (per-query transients
   // registered via track), so long-lived sessions can release them
@@ -433,8 +406,8 @@ object Shared {
     buildLocks.clear()
     // reset the touch attribution too: without this, run 2's warm
     // builds are attributed to run 1's LAST query in the touch report,
-    // and a misattributed consumer shifts a family's release point
-    // when the frozen map is regenerated from it (ADVICE r15)
+    // and the declared-consumer check would then demand that wrong
+    // consumer, shifting the family's release point (ADVICE r15)
     curQuery = ""
     touches.clear()
     retireTransients()
@@ -484,60 +457,40 @@ object Shared {
     }
   }
 
-  /** Build + force every expensive cross-query cache up-front
-    * (VERDICT r7 item 6): with the caches warm, per-query bench times
-    * no longer depend on which query first touches a cold cache — the
-    * build cost shows up as one explicit `cache_build` line instead of
-    * inflating whichever of q13/q17/q19/q49 ran first. */
-  def warm(s: SparkSession, dir: String): Unit = {
-    // the four cache families are independent — build them as
-    // concurrent Spark jobs so the warm pass uses the whole box
-    // instead of serializing four sub-cluster-sized builds
-    // (12.0 → 6.7 s at sf0.1; memoized's TrieMap is concurrent and
-    // Spark job submission is thread-safe)
+  /** Whether sweep group `group` has families to warm. The tail
+    * group has none, so warming it would only log a bogus
+    * `cache_build` row and muddy the cache forensics (ADVICE r16). */
+  def warmable(group: Int): Boolean =
+    graft.SweepOrder.familiesOf(group).nonEmpty
+
+  /** Build every memo family of sweep group `group`
+    * ([[graft.SweepOrder.group]]) so a sweep pays the build in an
+    * explicit `cache_build` step instead of loading it onto whichever
+    * consumer runs first (VERDICT r7 item 6). Sweeps call this at each
+    * cluster's FIRST query, so a family occupies budget only across its
+    * own consumer cluster: an up-front warm of every family held them
+    * all resident from minute 0, and at sf10 that residency forced the
+    * one round-15 eviction (pivotedScores out at q43, q72's 98 s
+    * rebuild).
+    *
+    * Each family builds as soon as its own parents are built, so
+    * independent branches run as concurrent Spark jobs (four
+    * independent families: 12.0 → 6.7 s at sf0.1; memoized's TrieMap
+    * is concurrent and Spark job submission is thread-safe). Every
+    * build is awaited; a failure is rethrown once all have finished. */
+  def warmGroup(s: SparkSession, dir: String, group: Int): Unit = {
     import scala.concurrent.{Await, Future}
     import scala.concurrent.ExecutionContext.Implicits.global
     import scala.concurrent.duration.Duration
-    Seq(
-      Future(warmGroup(s, dir, 0)),
-      Future(warmGroup(s, dir, 1)),
-      Future(warmGroup(s, dir, 2)))
-      .foreach(Await.result(_, Duration.Inf))
-  }
-
-  /** Build ONE sweep-order group's cache families
-    * ([[graft.SweepOrder.group]]: 0 match, 1 text, 2 vector) — the
-    * staged spelling of [[warm]]. An up-front warm holds every family
-    * resident from minute 0 even when its first consumer is an hour
-    * away; at sf10 that residency is exactly what forced the one
-    * round-15 eviction (pivotedScores pushed out at q43 → q72's 98 s
-    * rebuild). Sweeps call this at each cluster's FIRST query instead,
-    * so a family occupies budget only across its own consumer cluster.
-    * The graph-family frames (prEdges, bpeVocab) are sub-MiB and build
-    * lazily at first consumer — no stage needed. */
-  /** Sweep groups with staged-warm cache families ([[graft.SweepOrder]]:
-    * 0 match, 1 text, 2 vector). Groups 3/4 have none — their sub-MiB
-    * frames build lazily at first consumer — so warming them is a
-    * no-op that would only log a bogus `cache_build group 3/4` row and
-    * muddy the cache forensics (ADVICE r16). Harnesses gate the staged
-    * warm on this. */
-  def warmable(group: Int): Boolean = group <= 2
-
-  def warmGroup(s: SparkSession, dir: String, group: Int): Unit = group match {
-    case 0 => MatchingQueries.warmShared(s, dir)
-    case 1 =>
-      // three independent text families — build concurrently, same
-      // rationale as warm()
-      import scala.concurrent.{Await, Future}
-      import scala.concurrent.ExecutionContext.Implicits.global
-      import scala.concurrent.duration.Duration
-      Seq(
-        Future(ParityQueries.warmShared(s, dir)),
-        Future { dupPairs(s, dir).count(); () },
-        Future { simhashes(s, dir).count(); () })
-        .foreach(Await.result(_, Duration.Inf))
-    case 2 => VectorQueries.warmShared(s, dir)
-    case _ => ()
+    // parents are declared before their children, so one fold in
+    // declaration order chains every build on its parents' futures
+    val builds = graft.SweepOrder.familiesOf(group)
+      .foldLeft(Map.empty[String, Future[Unit]]) { (started, f) =>
+        started + (f.key ->
+          Future.sequence(f.parents.map(started)).map(_ => f.build(s, dir)))
+      }.values
+    builds.foreach(Await.ready(_, Duration.Inf))
+    builds.foreach(_.value.get.get)
   }
 
   /** MinHash-LSH near-dup pairs over documents (q26/q36/q59). */

@@ -241,11 +241,14 @@ object TextQueries {
       .select(col("doc_id"), fingerprint(col("hs"), 4).as("fp"))
       .orderBy("doc_id")
 
-  /** Shingle TF-IDF cosine pairs (the CosineMatcher analogue). */
-  def q29CosineShingles(s: SparkSession, dir: String): DataFrame =
+  /** Shingle TF-IDF cosine pairs (the CosineMatcher analogue). Building
+    * the plan persists its term-weight frame, the cosineWeights memo. */
+  private[graft] def cosinePairs(s: SparkSession, dir: String): DataFrame =
     CosineText.cosinePairs(Tables.documents(s, dir), "doc_id", "text",
-        memo = Shared.memoized(s, dir, "cosineWeights")(_))
-      .orderBy("doc1", "doc2")
+      memo = Shared.memoized(s, dir, "cosineWeights")(_))
+
+  def q29CosineShingles(s: SparkSession, dir: String): DataFrame =
+    cosinePairs(s, dir).orderBy("doc1", "doc2")
 
   /** SimHash hamming near-dup pairs (the PictureScorer-hamming
     * analogue, `matching/scorer/PictureScorer.scala:45,75-92`, with the

@@ -6,26 +6,12 @@ package graft.tools
 
 import java.util.concurrent.atomic.AtomicLong
 import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 object BuildProbe {
   def main(args: Array[String]): Unit = {
     val dir = args(0)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .withExtensions(new graft.GraftExtensions)
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.requireAllClusterKeysForCoPartition", "false")
-      .config("spark.io.compression.codec", "zstd")
-      .config("spark.sql.join.preferSortMergeJoin", sys.env.getOrElse("SHJ", "true"))
-      .config("spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold", sys.env.getOrElse("SHJT", "0"))
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Session.build(graft.Session.cpus(32))
     val shufR = new AtomicLong; val shufW = new AtomicLong
     val memSp = new AtomicLong; val diskSp = new AtomicLong
     spark.sparkContext.addSparkListener(new SparkListener {

@@ -2,10 +2,10 @@ package graft.tools
 
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions.col
 
-import graft.GraftExtensions
+import graft.Session
+import graft.Verify.jsonString
 import graft.queries.VectorQueries
 
 /** Per-leg scale verification of q172's unified retrieval-metrics
@@ -24,16 +24,7 @@ object LegVerify {
   def main(args: Array[String]): Unit = {
     val (sfDir, outDir) = (args(0), args(1))
     val only = args.drop(2).toSet
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .withExtensions(new GraftExtensions)
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session.build(Session.cpus(4))
     new java.io.File(outDir).mkdirs()
     val methods = VectorQueries.q172Methods
       .filter(m => only.isEmpty || only(m))
@@ -47,17 +38,8 @@ object LegVerify {
         .parquet(s"$outDir/q172_leg_$m")
       System.err.println(s"[legverify] wrote q172_leg_$m")
     }
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
     val json = methods
-      .map(m => s"${q(s"q172_leg_$m")}: ${q(VectorQueries.q172LegOracle(m))}")
+      .map(m => s"${jsonString(s"q172_leg_$m")}: ${jsonString(VectorQueries.q172LegOracle(m))}")
       .mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     spark.stop()

@@ -6,35 +6,19 @@
 package graft.tools
 
 import java.nio.file.{Files, Paths}
-import org.apache.spark.sql.SparkSession
 
 object PlanDump {
   def main(args: Array[String]): Unit = {
     val dir = args(0)
     val outDir = args(1)
     val names = args.drop(2)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .withExtensions(new graft.GraftExtensions)
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // match the Bench session so captured plans are the sweep's
-      .config("spark.sql.requireAllClusterKeysForCoPartition", "false")
-      // match the Bench session's shuffle codec too (round 18): a
-      // codec mismatch made warm probe timings diverge from in-sweep
-      .config("spark.io.compression.codec",
-        sys.env.getOrElse("SPARK_GRAFT_IO_CODEC", "zstd"))
-      .config("spark.sql.sources.parallelPartitionDiscovery.parallelism",
-        (cpus.toInt * 2).toString)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Session.build(graft.Session.cpus(32))
     Files.createDirectories(Paths.get(outDir))
-    // stage every warmable group once so memo reads are warm, as in a
-    // full sweep (group 3's sub-MiB families build lazily, as there)
-    (0 to 2).foreach(g => graft.queries.Shared.warmGroup(spark, dir, g))
+    // stage every family group once so memo reads are warm, as in a
+    // full sweep (groups 0.. are the family components; the tail group
+    // after them has none)
+    Iterator.from(0).takeWhile(graft.queries.Shared.warmable)
+      .foreach(g => graft.queries.Shared.warmGroup(spark, dir, g))
     names.foreach { name =>
       val fn = graft.SparkEntry.queries(name)
       val df = fn(spark, dir)

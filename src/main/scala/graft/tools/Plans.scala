@@ -1,17 +1,12 @@
 package graft.tools
-import org.apache.spark.sql.SparkSession
 import graft.SparkEntry
 import graft.queries.MatchingQueries
 object Plans {
   def main(a: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[4]")
-      .withExtensions(new graft.GraftExtensions)
-      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning",
-        sys.env.getOrElse("GRAFT_CACHE_PART", "true"))
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false").getOrCreate()
+    val spark = graft.Session.build(4)
+    // the value this tool has always printed plans under
+    spark.conf.set(
+      "spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
     spark.sparkContext.setLogLevel("ERROR")
     val dir = "/root/testdata/sf0.001"
     a.foreach { q =>

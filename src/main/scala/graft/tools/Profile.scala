@@ -3,7 +3,6 @@ package graft.tools
 
 import java.util.concurrent.atomic.AtomicLong
 import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
-import org.apache.spark.sql.SparkSession
 
 /** Explains the query's physical plan, then times it twice in one JVM
   * (run 1 cold, run 2 warm w.r.t. the session memo caches), reporting
@@ -16,24 +15,7 @@ object Profile {
 
   def main(args: Array[String]): Unit = {
     val dir = args(0)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    // partition count decoupled from thread count: the memory-pressure
-    // drill sizes partitions so per-task state fits the constrained
-    // heap (the knob a real cluster turns at scale)
-    val parts = sys.env.getOrElse("SPARK_GRAFT_PARTS", cpus)
-    val spark = SparkSession.builder()
-      .withExtensions(new graft.GraftExtensions)
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", parts)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // match the Bench session so profiled plans are the sweep's
-      .config("spark.sql.requireAllClusterKeysForCoPartition", "false")
-      .config("spark.sql.sources.parallelPartitionDiscovery.parallelism",
-        (cpus.toInt * 2).toString)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Session.build(graft.Session.cpus(8))
     val memSpill = new AtomicLong; val diskSpill = new AtomicLong
     val shufR = new AtomicLong; val shufW = new AtomicLong
     spark.sparkContext.addSparkListener(new SparkListener {

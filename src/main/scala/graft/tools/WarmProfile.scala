@@ -3,28 +3,19 @@
 // Usage: tools/run.sh graft.tools.WarmProfile <sfDir>
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 
 object WarmProfile {
   def main(args: Array[String]): Unit = {
     val dir = args(0)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .withExtensions(new graft.GraftExtensions)
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Session.build(graft.Session.cpus(32))
     def t(what: String)(body: => Unit): Unit = {
       val t0 = System.nanoTime()
       body
       println(f"[warmprofile] $what ${(System.nanoTime() - t0) / 1e9}%.1f s")
     }
-    // layer order mirrors MatchingQueries.warmShared, but serial so the
-    // attribution is per layer (queries touch the memo via SparkEntry)
+    // layer order follows the match chain's declared parents
+    // (SweepOrder.families), but serial so the attribution is per layer
+    // (queries touch the memo via SparkEntry)
     val q = graft.SparkEntry.queries
     t("partCands (q13)")(q("q13_entity_candidates")(spark, dir).count())
     t("partScores (q14)")(q("q14_entity_scores")(spark, dir).count())

@@ -259,7 +259,7 @@ class CacheRetirementSpec extends AnyFunSuite {
     Shared.clear()
     val dir = "/cache-spec-chain"
     // real family names: the derivation edge pairScores2→pivotedScores
-    // is the declared one (Shared.derivedFrom)
+    // is the declared one (SweepOrder.families)
     val parent = Shared.memoized(spark, dir, "pivotedScores")(
       spark.range(0, 40000).toDF("x"))
     val child = Shared.memoized(spark, dir, "pairScores2")(

@@ -26,54 +26,49 @@ class QueriesSpec extends AnyFunSuite {
   // (lab_name, country) block ever holds two labs at that scale.
   private val allowedEmpty = Set("q07_anti_join", "q96_lab_dedup")
 
-  // Full sweep under the SAME protocol as Bench/Verify: clustered
-  // order, each group's cache families warmed UNATTRIBUTED at its
-  // cluster's first query — so the touch report this records has the
-  // same provenance as the one SweepOrder.memoConsumers was frozen
-  // from (a different order attributes a family's transitive chain
-  // builds to whichever consumer happens to run first).
+  // Full sweep through the Bench/Verify loop (SweepOrder.sweep):
+  // clustered order, each group's families warmed UNATTRIBUTED at its
+  // cluster's first query — so the touch report it records is exactly
+  // what the declared consumers must match (a different order would
+  // attribute a family's transitive chain builds to whichever
+  // consumer happens to run first).
   private def runAttributedSweep(): Unit = {
     queries.Shared.clear()
-    val warmed = scala.collection.mutable.Set.empty[Int]
-    SweepOrder.sort(SparkEntry.queries.toSeq).foreach { case (name, fn) =>
-      val g = SweepOrder.group(name)
-      if (warmed.add(g)) {
-        queries.Shared.beginQuery("")
-        queries.Shared.warmGroup(spark, sf, g)
-      }
-      queries.Shared.beginQuery(name)
+    val (_, warmOk) = SweepOrder.sweep(spark, sf, SparkEntry.queries.toSeq,
+        full = true, "spec") { (name, fn) =>
       val df = fn(spark, sf)
       assert(df.columns.nonEmpty, s"$name has no columns")
       val n = df.count()
       if (allowedEmpty(name)) assert(n >= 0, s"$name failed to execute")
       else assert(n > 0, s"$name returned 0 rows at sf0.001")
     }
-    queries.Shared.beginQuery("")
+    assert(warmOk, "a staged warm failed (cause on stderr)")
   }
 
   test("every declared query runs and (unless allowlisted) returns rows") {
     runAttributedSweep()
   }
 
-  test("every observed memo touch is declared in SweepOrder.memoConsumers") {
-    // The frozen consumer map drives scheduler release: a NEW query
-    // consuming a released family silently pays a full rebuild at sf10
-    // (VERDICT r15 missing #3). This regenerates the touch report at
-    // sf0.001 from the sweep above and fails when a touch is not
-    // declared — update SweepOrder.memoConsumers (and the group sets)
-    // when adding a consumer; discover with SPARK_GRAFT_TOUCH_REPORT=1.
+  test("declared memo consumers equal the touches a sweep observes") {
+    // The declared consumers drive groups, warm sets and release: a
+    // NEW query consuming a released family silently pays a full
+    // rebuild at sf10 (VERDICT r15 missing #3), and a STALE consumer
+    // holds a dead family resident and can merge groups. Both fail
+    // here; the observed map is printed so the declaration in
+    // SweepOrder.families can be corrected from it.
     if (queries.Shared.touchReport.isEmpty)
       runAttributedSweep() // self-sufficient under -z test filtering
-    val report = queries.Shared.touchReport
-    assert(report.nonEmpty, "no memo touches recorded")
-    report.foreach { case (key, qs) =>
-      val prefixes = SweepOrder.memoConsumers.keys.filter(key.startsWith).toSeq
-      assert(prefixes.size === 1,
-        s"memo key '$key' matches ${prefixes.size} memoConsumers prefixes ($prefixes); release scheduling needs exactly one")
-      val undeclared = qs.toSet -- SweepOrder.memoConsumers(prefixes.head)
-      assert(undeclared.isEmpty,
-        s"memo '$key' touched by consumers missing from SweepOrder.memoConsumers('${prefixes.head}'): ${undeclared.toSeq.sorted.mkString(", ")}")
-    }
+    val observed = queries.Shared.touchReport
+      .groupMapReduce { case (key, _) =>
+        SweepOrder.familyOf(key).fold(s"<undeclared family of '$key'>")(_.key)
+      }(_._2.toSet)(_ ++ _)
+    val declared = SweepOrder.families
+      .collect { case f if f.consumers.nonEmpty => f.key -> f.consumers }.toMap
+    def show(m: Map[String, Set[String]]) = m.toSeq.sortBy(_._1)
+      .map { case (k, qs) => s"  $k -> ${qs.toSeq.sorted.mkString(", ")}" }
+      .mkString("\n")
+    assert(observed === declared,
+      s"observed memo touches (family -> consumers):\n${show(observed)}")
     queries.Shared.clear()
   }
 
