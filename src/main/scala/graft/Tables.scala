@@ -41,14 +41,17 @@ object Tables {
     else Option(f.listFiles).getOrElse(throw new java.io.IOException(
       s"cannot list table directory ${f.getPath}")).map(diskBytes).sum
 
+  /** Bytes on disk of table `name` under `dir` (a file listing, no job). */
+  def bytes(dir: String, name: String): Long =
+    diskBytes(new java.io.File(s"$dir/$name.parquet"))
+
   def apply(spark: SparkSession, dir: String, name: String): DataFrame =
     scans.getOrElseUpdate(
       (spark.sparkContext.applicationId, dir, name), {
         val df = spark.read.parquet(s"$dir/$name.parquet")
         val target = spark.sparkContext.defaultParallelism
         val parts = df.rdd.getNumPartitions
-        val bytes = diskBytes(new java.io.File(s"$dir/$name.parquet"))
-        if (parts < target && bytes >= MinParallelizeBytes)
+        if (parts < target && bytes(dir, name) >= MinParallelizeBytes)
           // HASH repartition on the table's leading column (its
           // high-cardinality key in this star schema): a keyless
           // round-robin repartition first pays a local sort of the

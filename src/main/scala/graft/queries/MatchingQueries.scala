@@ -64,7 +64,7 @@ object MatchingQueries {
   // weight windows require to stay exchange-free).
   private[graft] def partSuppScores(s: SparkSession, dir: String): DataFrame =
     memoized(s, dir, "partSuppScores") {
-      val n = s.conf.get("spark.sql.shuffle.partitions", "32").toInt
+      val n = graft.Session.partitions(s)
       EntityMatching.scorePairs(
         EntityMatching.candidatePairs(partSuppEntities(s, dir))
           .repartition(n, col("doc1")), "partsupp_overlap")

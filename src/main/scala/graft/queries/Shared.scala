@@ -146,18 +146,15 @@ object Shared {
 
   /** Session-cache storage budget in bytes (mem + disk): when total
     * persisted storage exceeds it, [[enforceBudget]] evicts memo
-    * frames until back under. 0 disables.
+    * frames until back under.
     *
-    * Default: 60% of the scratch volume's FREE space, measured once at
+    * Derived: 60% of the scratch volume's FREE space, measured once at
     * startup — the round-14 verdict's exact finding was that a fixed
     * one-box constant (24 GiB) turned into engine policy: far above
     * any sf0.1 working set (no effect on the canonical bench) yet
     * below the ~31 GiB sf10 hot family, which the LRU then rebuilt
     * ~15 times (2.54× like-for-like). Sizing to the machine is what a
-    * per-executor deployment does; SPARK_GRAFT_CACHE_BUDGET_GB stays
-    * as the explicit override (whole GiB; malformed values warn and
-    * fall back rather than poisoning every query with an
-    * ExceptionInInitializerError). */
+    * per-executor deployment does. */
   /** Scratch the budget must LEAVE FREE for what it cannot govern:
     * live shuffle files plus the deleted-but-still-mmap'd shuffle
     * transient (the round-15 sf10 run sampled whole-disk df 20–40 GiB
@@ -214,28 +211,15 @@ object Shared {
                math.min(1L << 30, usable / 2)),
       64L << 20)
 
-  private val envBudgetBytes: Option[Long] =
-    sys.env.get("SPARK_GRAFT_CACHE_BUDGET_GB").flatMap { v =>
-      v.toLongOption match {
-        case Some(g) => Some(g << 30)
-        case None =>
-          System.err.println("[graft] SPARK_GRAFT_CACHE_BUDGET_GB=" +
-            s"'$v' is not a whole number of GiB; using the " +
-            "scratch-derived default")
-          None
-      }
-    }
-
-  val cacheBudgetBytes: Long = envBudgetBytes.getOrElse(
-    derivedBudget(scratchUsable0, headroomBytes(0L, scratchUsable0)))
+  val cacheBudgetBytes: Long =
+    derivedBudget(scratchUsable0, headroomBytes(0L, scratchUsable0))
 
   /** Budget as of NOW: re-derived each enforcement with the headroom
-    * sized to the shuffle watermark observed so far this JVM. The env
-    * override pins it (the sf10 arms are measured under a pinned
-    * 40 GiB); with no watermark yet this equals [[cacheBudgetBytes]]. */
-  def currentBudget: Long = envBudgetBytes.getOrElse(
+    * sized to the shuffle watermark observed so far this JVM; with no
+    * watermark yet this equals [[cacheBudgetBytes]]. */
+  def currentBudget: Long =
     derivedBudget(scratchUsable0,
-      headroomBytes(shuffleWatermark, scratchUsable0)))
+      headroomBytes(shuffleWatermark, scratchUsable0))
 
   /** Deficit-cover eviction plan (pure, spec-pinned): choose victims
     * minimizing total rebuild seconds for the bytes that must go.
@@ -444,7 +428,7 @@ object Shared {
       lock.synchronized {
         memo.get(mk).getOrElse {
           val t0 = System.nanoTime()
-          val n = s.conf.get("spark.sql.shuffle.partitions", "32").toInt
+          val n = graft.Session.partitions(s)
           val df = if (parts.isEmpty) build
             else build.repartition(n, parts.map(col): _*)
           val p = df.persist(StorageLevel.MEMORY_AND_DISK)

@@ -1088,16 +1088,14 @@ object VectorQueries {
   /** q162: embedding near-dup CLUSTERS — the grouping step a dedup
     * pipeline runs after pair generation: q74's LSH-prefiltered,
     * cosine-verified pairs become edges, connected components
-    * (iterative min-label propagation, [[graft.operators
-    * .GraphComponents]] — the reference clusters person/lab dups the
-    * same way, GraphX `connectedComponents` in
+    * ([[graft.operators.GraphComponents]] — the reference clusters
+    * person/lab dups the same way, GraphX `connectedComponents` in
     * `deduplication/PersonDeduplicationStage.scala:150-159`) give
     * every vector a cluster id, and the canonical survivor is the
     * minimum vec_id (keep = vec_id == component), with cluster sizes
-    * for the curation report. Dup graphs are forests of tiny
-    * clusters (diameter 2-5), so label propagation converges in
-    * single-digit rounds at any corpus size; each round is one
-    * equi-join + one combinable min aggregate on the node id. Oracle:
+    * for the curation report. The embedding dup graph chains further
+    * than the document dup pairs (min-label alone needs 12 rounds at
+    * sf0.1), so the operator finishes it with star rounds. Oracle:
     * recursive min-label reachability over the same pair CTEs. */
   def q162EmbeddingDupClusters(s: SparkSession, dir: String): DataFrame = {
     val emb = Tables.embeddings(s, dir)
@@ -1404,16 +1402,18 @@ object VectorQueries {
     // the symmetrized neighbour list feeds FOUR consumers (degrees,
     // the core-core edges, border assignment, the output join) —
     // persist so the eps filter over the candCosines cache runs once.
-    // Cached hash-partitioned on `a` at a STATE-sized count (the
-    // graph is edge-list-sized, not corpus-sized — round 18, guide
-    // §2.2): the union of two 32-partition cached reads otherwise
-    // persists as 64 near-empty partitions that every consumer pays
-    // 64 task launches to read, and the deg groupBy + both semi
-    // joins re-shuffle; off the a-partitioned cache the deg
-    // aggregation plans exchange-free
+    // Cached hash-partitioned on `a` at a STATE-sized count, derived
+    // from the embeddings input (the graph is edge-list-sized, not
+    // corpus-sized — guide §2.2): the union of two session-sized
+    // cached reads otherwise persists as twice the session count of
+    // near-empty partitions that every consumer pays a task launch
+    // each to read, and the deg groupBy + both semi joins re-shuffle;
+    // off the a-partitioned cache the deg aggregation plans
+    // exchange-free
     val sym = nb.select(col("v1").as("a"), col("v2").as("b"))
       .unionByName(nb.select(col("v2").as("a"), col("v1").as("b")))
-      .repartition(8, col("a"))
+      .repartition(graft.Session.statePartitions(s,
+        Tables.bytes(dir, "embeddings")), col("a"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val deg = sym.groupBy("a").agg(count(lit(1)).as("deg"))
     val core = deg.filter(col("deg") >= DbscanMinPts).select("a")
@@ -1422,15 +1422,9 @@ object VectorQueries {
       .join(core.select(col("a").as("b")), Seq("b"), "semi")
       .select(col("a").as("src"), col("b").as("dst"))
     // the eps-0.25 core graph is much denser than q162's 0.3 dup
-    // forest and min-label propagation pays a full round per diameter
-    // step; the alternating-star variant contracts it in O(log2 n)
-    // rounds, and the per-round frames are graph-sized (17k edges at
-    // sf0.1) so the round loop runs at state-sized shuffle parallelism
-    // (the EventStream drainSized rationale) — together ~2.5x
-    // state-sized round partitions are pinned INSIDE the operator
-    // since round 18 (GraphComponents.withStatePartitions), so every
-    // CC consumer gets the q178 treatment, not just this one
-    val comp = graft.operators.GraphComponents.connectedComponentsStar(
+    // forest: min-label propagation pays a round per diameter step,
+    // so the operator switches to large-star/small-star on it
+    val comp = graft.operators.GraphComponents.connectedComponents(
         core.select(col("a").as("node")), coreEdges)
       .localCheckpoint()
       .select(col("node").as("a"), col("comp").as("cluster"))

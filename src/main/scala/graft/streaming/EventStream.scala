@@ -3,7 +3,7 @@ package graft.streaming
 import java.util.concurrent.atomic.AtomicInteger
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, Trigger}
+import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQuery, Trigger}
 import graft.functions.Exact
 
 /** Structured Streaming surface over the events table. The reference
@@ -24,26 +24,36 @@ object EventStream {
 
   private val runIdx = new AtomicInteger(0)
 
-  /** State-store partition count for the bounded oracle/bench drains.
-    * Stateful-stream partitioning is a STATE-VOLUME knob, not a
-    * data-volume knob: every partition pays a per-micro-batch state
-    * store commit (four stores per partition for a stream-stream
-    * join), so a bounded ~100k-event drain wants single-digit
-    * partitions, while a 1000-executor deployment sizes it to total
-    * state across executors. Measured at sf0.1 for the stream-stream
-    * join (tools/StreamProbe): 32 partitions → 9.4 s, 8 → 3.6 s,
-    * 4 → 2.5 s, identical results. */
-  private val drainStatePartitions = 8
+  /** Run one bounded drain to completion: `start` builds and starts
+    * the stream on a private session. A stateful stream latches its
+    * state-store partition count — the starting session's shuffle
+    * partitions — at `.start()`, and every partition pays a state
+    * commit per micro-batch (four stores for a stream-stream join), so
+    * that count is sized to the drain's input, the events table's
+    * bytes on disk ([[graft.Session.statePartitions]]). The caller's
+    * session config is never changed; its streaming listeners are
+    * attached to the private session so they still see the drain. */
+  private def drain(s: SparkSession, dir: String)(
+      start: SparkSession => StreamingQuery): SparkSession = {
+    val ns = s.newSession()
+    ns.conf.set("spark.sql.shuffle.partitions", graft.Session
+      .statePartitions(s, graft.Tables.bytes(dir, "events")).toString)
+    s.streams.listListeners().foreach(ns.streams.addListener)
+    start(ns).awaitTermination()
+    ns
+  }
 
-  /** Run `body` (a stream start + drain) with the session's shuffle
-    * partitions sized for drain state; restore the caller's setting
-    * after. The count latches into the query plan at `.start()`, so
-    * the override must span it. */
-  private def drainSized[T](s: SparkSession)(body: => T): T = {
-    val key = "spark.sql.shuffle.partitions"
-    val prev = s.conf.get(key)
-    s.conf.set(key, drainStatePartitions.toString)
-    try body finally s.conf.set(key, prev)
+  /** [[drain]] `stream` with AvailableNow into a memory sink; returns
+    * the sink's rows as a frame of the caller's session (the sink's
+    * table lives in the private one, and the rows are on the driver
+    * already). */
+  private def drainToMemory(s: SparkSession, dir: String, mode: String)(
+      stream: SparkSession => DataFrame): DataFrame = {
+    val name = s"graft_stream_${runIdx.incrementAndGet()}"
+    val sink = drain(s, dir)(ns => stream(ns).writeStream.format("memory")
+      .queryName(name).outputMode(mode)
+      .trigger(Trigger.AvailableNow()).start()).table(name)
+    s.createDataFrame(sink.collectAsList(), sink.schema)
   }
 
   def eventsStream(s: SparkSession, dir: String): DataFrame =
@@ -65,17 +75,8 @@ object EventStream {
   /** Run the stream to completion over the (finite) input, return the
     * materialized result. */
   def windowedCountsOnce(s: SparkSession, dir: String,
-                         outputMode: String = "complete"): DataFrame = { drainSized(s) {
-    val name = s"graft_stream_win_${runIdx.incrementAndGet()}"
-    val q = windowedAgg(eventsStream(s, dir))
-      .writeStream.format("memory").queryName(name)
-      .outputMode(outputMode)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    s.table(name)
-  }
-  }
+                         outputMode: String = "complete"): DataFrame =
+    drainToMemory(s, dir, outputMode)(ns => windowedAgg(eventsStream(ns, dir)))
 
   /** The latest-wins changelog compaction, shared verbatim by the
     * batch (q130) and streaming (q143) halves of the parity pair so
@@ -103,17 +104,8 @@ object EventStream {
     * maintenance identity, but with the state store doing the merge).
     * The batch q130 oracle verifies the drained snapshot
     * bit-for-bit. */
-  def compactOnce(s: SparkSession, dir: String): DataFrame = { drainSized(s) {
-    val name = s"graft_stream_compact_${runIdx.incrementAndGet()}"
-    val q = compact(eventsStream(s, dir))
-      .writeStream.format("memory").queryName(name)
-      .outputMode("complete")
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    s.table(name)
-  }
-  }
+  def compactOnce(s: SparkSession, dir: String): DataFrame =
+    drainToMemory(s, dir, "complete")(ns => compact(eventsStream(ns, dir)))
 
   /** Update-mode CDC compaction into a keyed external store — the
     * 100 TB shape of [[compactOnce]]'s snapshot maintenance (round-8
@@ -141,12 +133,12 @@ object EventStream {
     * Both the multi-epoch behaviour (second batch appends only its
     * touched users; reconstruction still equals the batch snapshot)
     * and replay idempotence are pinned in StreamingSpec. */
-  def compactUpdateOnce(s: SparkSession, dir: String): DataFrame = { drainSized(s) {
+  def compactUpdateOnce(s: SparkSession, dir: String): DataFrame = {
     val idx = runIdx.incrementAndGet()
     val out = java.nio.file.Paths.get(
       sys.props("java.io.tmpdir"), "graft-stream",
       Integer.toHexString(dir.hashCode), s"cdc_update_log_$idx").toString
-    val q = compact(eventsStream(s, dir))
+    drain(s, dir)(ns => compact(eventsStream(ns, dir))
       .writeStream
       .outputMode("update")
       .foreachBatch { (batch: DataFrame, epoch: Long) =>
@@ -154,10 +146,8 @@ object EventStream {
           .write.mode("append").parquet(out)
       }
       .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
+      .start())
     snapshotFromLog(s.read.parquet(out))
-  }
   }
 
   /** STREAMING drift monitor — the q136 PSI with the CURRENT side
@@ -176,7 +166,7 @@ object EventStream {
     * Scale shape: the streaming state is ≤ types × 25 rows regardless
     * of event volume (counts are combinable); the readout is
     * dimension-sized joins. */
-  def driftOnce(s: SparkSession, dir: String): DataFrame = { drainSized(s) {
+  def driftOnce(s: SparkSession, dir: String): DataFrame = {
     val NB = 25
     val cutoff = lit("2024-01-16").cast("timestamp")
     def bucketed(df: DataFrame): DataFrame = df
@@ -186,15 +176,9 @@ object EventStream {
     val ref = bucketed(
         graft.Tables.events(s, dir).filter(col("ts") < cutoff))
       .groupBy("event_type", "bucket").agg(count(lit(1)).as("ref_n"))
-    val name = s"graft_stream_drift_${runIdx.incrementAndGet()}"
-    val q = bucketed(eventsStream(s, dir).filter(col("ts") >= cutoff))
-      .groupBy("event_type", "bucket").agg(count(lit(1)).as("cur_n"))
-      .writeStream.format("memory").queryName(name)
-      .outputMode("complete")
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    val cur = s.table(name)
+    val cur = drainToMemory(s, dir, "complete")(ns =>
+      bucketed(eventsStream(ns, dir).filter(col("ts") >= cutoff))
+        .groupBy("event_type", "bucket").agg(count(lit(1)).as("cur_n")))
     val cells = ref.join(cur, Seq("event_type", "bucket"), "full_outer")
       .na.fill(0L, Seq("ref_n", "cur_n"))
     val tot = cells.groupBy("event_type")
@@ -207,7 +191,6 @@ object EventStream {
           * log(col("p_cur") / col("p_ref")) * 1e6).cast("long"))
       .select("event_type", "bucket", "ref_n", "cur_n", "psi_micro")
       .orderBy("event_type", "bucket")
-  }
   }
 
   /** Latest-epoch-wins snapshot reconstruction over an update-mode
@@ -266,29 +249,21 @@ object EventStream {
     * AvailableNow into a memory sink. Column-compatible with the batch
     * [[graft.operators.EventAnalytics.sessionize]] / its DuckDB oracle. */
   def statefulSessionsOnce(s: SparkSession, dir: String,
-                           gapMinutes: Int = 30): DataFrame = { drainSized(s) {
+                           gapMinutes: Int = 30): DataFrame = {
     import s.implicits._
     val gapUs = gapMinutes * 60L * 1000000L
-    val ev = eventsStream(s, dir)
+    drainToMemory(s, dir, "append")(ns => eventsStream(ns, dir)
       .select(col("user_id"), unix_micros(col("ts")).as("ts_us"),
         col("event_id"), Exact.cents(col("value")).as("cents"))
       .as[SessEv]
-    val name = s"graft_stream_sess_${runIdx.incrementAndGet()}"
-    val q = ev.groupByKey(_.user_id)
+      .groupByKey(_.user_id)
       .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.NoTimeout)(
         sessionizeGroup(gapUs))
-      .toDF()
-      .writeStream.format("memory").queryName(name)
-      .outputMode("append")
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    s.table(name)
+      .toDF())
       .select(col("user_id"), col("sess_id"),
         timestamp_micros(col("start_us")).as("session_start"),
         timestamp_micros(col("end_us")).as("session_end"),
         col("n_events"), col("sum_value_cents"))
-  }
   }
 
   // ---- streaming dedup / join / file sink --------------------------
@@ -299,50 +274,35 @@ object EventStream {
     * q22's batch content dedup. Drained append-mode into memory; the
     * per-type roll-up of the deduped rows must equal the batch
     * distinct-events aggregate. */
-  def dedupedCountsOnce(s: SparkSession, dir: String): DataFrame = { drainSized(s) {
-    val ev = eventsStream(s, dir)
-    val doubled = ev.unionByName(ev)
-    val name = s"graft_stream_dedup_${runIdx.incrementAndGet()}"
-    val q = doubled
-      .withWatermark("ts", "1 hour")
-      .dropDuplicates("event_id")
-      .select(col("event_id"), col("event_type"),
-        Exact.cents(col("value")).as("cents"))
-      .writeStream.format("memory").queryName(name)
-      .outputMode("append")
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    s.table(name)
+  def dedupedCountsOnce(s: SparkSession, dir: String): DataFrame =
+    drainToMemory(s, dir, "append") { ns =>
+      val ev = eventsStream(ns, dir)
+      ev.unionByName(ev)
+        .withWatermark("ts", "1 hour")
+        .dropDuplicates("event_id")
+        .select(col("event_id"), col("event_type"),
+          Exact.cents(col("value")).as("cents"))
+    }
       .groupBy("event_type")
       .agg(count(lit(1)).as("n_events"), sum("cents").as("sum_value_cents"))
-  }
-  }
 
   /** Stream-static join: the event stream joined to a static per-user
     * dimension (computed batch-side from the same table), then
     * per-(bucket, type) roll-up. The static side is planned as a
     * broadcast per micro-batch — the streaming analogue of the
     * reference's broadcast dim joins (J5). */
-  def streamStaticJoinOnce(s: SparkSession, dir: String): DataFrame = { drainSized(s) {
-    val userDim = graft.Tables.events(s, dir)
-      .select(col("user_id")).distinct()
-      .withColumn("user_bucket", col("user_id") % 10)
-    val name = s"graft_stream_join_${runIdx.incrementAndGet()}"
-    val q = eventsStream(s, dir)
-      .join(broadcast(userDim), Seq("user_id"))
-      .select(col("user_bucket"), col("event_type"),
-        Exact.cents(col("value")).as("cents"))
-      .writeStream.format("memory").queryName(name)
-      .outputMode("append")
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    s.table(name)
+  def streamStaticJoinOnce(s: SparkSession, dir: String): DataFrame =
+    drainToMemory(s, dir, "append") { ns =>
+      val userDim = graft.Tables.events(ns, dir)
+        .select(col("user_id")).distinct()
+        .withColumn("user_bucket", col("user_id") % 10)
+      eventsStream(ns, dir)
+        .join(broadcast(userDim), Seq("user_id"))
+        .select(col("user_bucket"), col("event_type"),
+          Exact.cents(col("value")).as("cents"))
+    }
       .groupBy("user_bucket", "event_type")
       .agg(count(lit(1)).as("n_events"), sum("cents").as("sum_value_cents"))
-  }
-  }
 
   /** Built-in merging session windows on the stream:
     * `session_window(ts, gap)` grouped per user — the declarative
@@ -355,9 +315,8 @@ object EventStream {
     * window-merge rule: a new event merges only if it starts strictly
     * inside the previous window). */
   def sessionWindowsOnce(s: SparkSession, dir: String,
-                         gapMinutes: Int = 30): DataFrame = { drainSized(s) {
-    val name = s"graft_stream_sesswin_${runIdx.incrementAndGet()}"
-    val q = eventsStream(s, dir)
+                         gapMinutes: Int = 30): DataFrame =
+    drainToMemory(s, dir, "complete")(ns => eventsStream(ns, dir)
       .withWatermark("ts", "1 hour")
       .groupBy(session_window(col("ts"), s"$gapMinutes minutes").as("sw"),
         col("user_id"))
@@ -367,15 +326,7 @@ object EventStream {
         count(lit(1)).as("n_events"),
         sum(Exact.cents(col("value"))).as("sum_value_cents"))
       .select("user_id", "session_start", "session_end", "n_events",
-        "sum_value_cents")
-      .writeStream.format("memory").queryName(name)
-      .outputMode("complete")
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    s.table(name)
-  }
-  }
+        "sum_value_cents"))
 
   /** Stream-stream interval join: view events joined to purchase
     * events of the same user within [view_ts, view_ts + 30 min]. Both
@@ -385,54 +336,45 @@ object EventStream {
     * user_id; at 100 TB/day the watermark bound is what keeps state
     * finite). Drained AvailableNow into memory; the batch SQL oracle
     * proves stream/batch parity. */
-  def streamStreamJoinOnce(s: SparkSession, dir: String): DataFrame = { drainSized(s) {
-    val ev = eventsStream(s, dir)
-    val views = ev.filter(col("event_type") === "view")
-      .select(col("event_id").as("view_id"), col("user_id"),
-        col("ts").as("view_ts"))
-      .withWatermark("view_ts", "1 hour")
-    val purchases = ev.filter(col("event_type") === "purchase")
-      .select(col("event_id").as("purchase_id"),
-        col("user_id").as("purchase_user"), col("ts").as("purchase_ts"),
-        Exact.cents(col("value")).as("purchase_cents"))
-      .withWatermark("purchase_ts", "1 hour")
-    val name = s"graft_stream_ssjoin_${runIdx.incrementAndGet()}"
-    val q = views.join(purchases,
-        col("user_id") === col("purchase_user") &&
-        col("purchase_ts") >= col("view_ts") &&
-        col("purchase_ts") <= col("view_ts") + expr("INTERVAL 30 MINUTES"))
-      .select(col("user_id"), col("view_id"), col("purchase_id"),
-        (unix_micros(col("purchase_ts")) - unix_micros(col("view_ts")))
-          .as("lag_us"),
-        col("purchase_cents"))
-      .writeStream.format("memory").queryName(name)
-      .outputMode("append")
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    s.table(name)
-  }
-  }
+  def streamStreamJoinOnce(s: SparkSession, dir: String): DataFrame =
+    drainToMemory(s, dir, "append") { ns =>
+      val ev = eventsStream(ns, dir)
+      val views = ev.filter(col("event_type") === "view")
+        .select(col("event_id").as("view_id"), col("user_id"),
+          col("ts").as("view_ts"))
+        .withWatermark("view_ts", "1 hour")
+      val purchases = ev.filter(col("event_type") === "purchase")
+        .select(col("event_id").as("purchase_id"),
+          col("user_id").as("purchase_user"), col("ts").as("purchase_ts"),
+          Exact.cents(col("value")).as("purchase_cents"))
+        .withWatermark("purchase_ts", "1 hour")
+      views.join(purchases,
+          col("user_id") === col("purchase_user") &&
+          col("purchase_ts") >= col("view_ts") &&
+          col("purchase_ts") <= col("view_ts") + expr("INTERVAL 30 MINUTES"))
+        .select(col("user_id"), col("view_id"), col("purchase_id"),
+          (unix_micros(col("purchase_ts")) - unix_micros(col("view_ts")))
+            .as("lag_us"),
+          col("purchase_cents"))
+    }
 
   /** Streaming aggregation → file sink via foreachBatch: each
     * micro-batch overwrites the parquet output with the complete
     * windowed aggregate (the idempotent-overwrite pattern for
     * aggregate sinks); the function then reads the files back. This is
     * the S7 sink shape on the streaming path. */
-  def parquetSinkOnce(s: SparkSession, dir: String): DataFrame = { drainSized(s) {
+  def parquetSinkOnce(s: SparkSession, dir: String): DataFrame = {
     val out = java.nio.file.Paths.get(
       sys.props("java.io.tmpdir"), "graft-stream",
       Integer.toHexString(dir.hashCode), "win_parquet").toString
-    val q = windowedAgg(eventsStream(s, dir))
+    drain(s, dir)(ns => windowedAgg(eventsStream(ns, dir))
       .writeStream
       .outputMode("complete")
       .foreachBatch { (batch: DataFrame, _: Long) =>
         batch.write.mode("overwrite").parquet(out)
       }
       .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
+      .start())
     s.read.parquet(out)
-  }
   }
 }

@@ -141,9 +141,8 @@ class CacheRetirementSpec extends AnyFunSuite {
     Shared.clear()
   }
 
-  test("budget default derives from the scratch volume and the env " +
-      "override path is crash-safe by construction") {
-    // the default is min(60% of free scratch, free − shuffle headroom)
+  test("budget derives from the scratch volume") {
+    // the budget is min(60% of free scratch, free − shuffle headroom)
     // at startup, floored at min(1 GiB, free/2) — positive on any box,
     // and never above the volume's actual free space
     assert(Shared.cacheBudgetBytes > 0L)
